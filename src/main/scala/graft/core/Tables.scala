@@ -1,14 +1,20 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Accessors for the harness tables (TPC-H-ish star schema + events /
   * documents / embeddings), one parquet file per table under `dir`.
   *
-  * Reads are plain `spark.read.parquet` so Catalyst keeps full
-  * pushdown/pruning freedom; nothing is cached here — callers decide
+  * Reads go through `Tables.read`: the parquet schema is read from one
+  * footer on the driver (ParquetBridge — the footer Spark's own
+  * inference would pick) and passed to `spark.read.schema(..).parquet`,
+  * so resolving a table launches no Spark job; partition columns are
+  * still inferred by the file index, and Catalyst keeps full
+  * pushdown/pruning freedom. Nothing is cached here, not even the
+  * schema (a rewritten table is read as it is now); callers decide
   * what to persist. Accessors are `lazy val`s so repeated references
   * within one query share attribute IDs (required for expressing join
   * conditions as `t.orders("o_orderkey") === t.lineitem("l_orderkey")`).
@@ -27,7 +33,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 final case class Tables(spark: SparkSession, dir: String) {
   def table(name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Tables.read(spark, s"$dir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else if (name == "events" && df.schema("ts").dataType == TimestampNTZType)
@@ -48,7 +54,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * predicates belong HERE, converted to the raw unit — a filter on
     * the converted column sits above `timestamp_micros(...)` and can
     * never reach the parquet scan. */
-  lazy val eventsRaw: DataFrame  = spark.read.parquet(s"$dir/events.parquet")
+  lazy val eventsRaw: DataFrame  = Tables.read(spark, s"$dir/events.parquet")
   lazy val documents: DataFrame  = table("documents")
   lazy val embeddings: DataFrame = table("embeddings")
 
@@ -60,4 +66,16 @@ final case class Tables(spark: SparkSession, dir: String) {
   def registerViews(): Unit = names.foreach { n =>
     table(n).createOrReplaceTempView(n)
   }
+}
+
+object Tables {
+  /** `spark.read.parquet(path)` with the schema read on the driver
+    * (ParquetBridge.footerSchema) instead of by an inference job. A
+    * path Spark must resolve itself (no data file, schema merging on)
+    * is read plainly, so its errors are Spark's own. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    ParquetBridge.footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None    => spark.read.parquet(path)
+    }
 }

@@ -111,6 +111,6 @@ object Pipeline {
     * it (the reference's ad-hoc analytics surface, postgres_reader.py). */
   def registerWarehouse(spark: SparkSession, outDir: String): Unit =
     stages(Tables(spark, outDir)).map(_._1).foreach { name =>
-      spark.read.parquet(s"$outDir/$name").createOrReplaceTempView(name)
+      Tables.read(spark, s"$outDir/$name").createOrReplaceTempView(name)
     }
 }

@@ -59,24 +59,26 @@ object StageProf {
           si.name.takeWhile(_ != '\n').take(60))
       }
     }
-    spark.sparkContext.addSparkListener(listener)
     // GRAFT_PROF_WARM=1: execute each query once untimed first (cache
     // and JIT warm, like Bench's steady-state minima), so the printed
     // stages attribute the WARM run — the number the bench reports —
-    // instead of first-build cost.
+    // instead of first-build cost. The listener is attached only around
+    // the timed run, so the warm-up's jobs and stages are not printed.
     val warm = sys.env.get("GRAFT_PROF_WARM").contains("1")
     names.foreach { n =>
       println(s"=== $n @ $dir ===")
       if (warm) {
         graft.SparkEntry.queries(n)(spark, dir).count()
+        // let the warm-up's events drain before the listener attaches
         Thread.sleep(500)
-        println(s"--- warm runs below ---")
       }
+      spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       val c = graft.SparkEntry.queries(n)(spark, dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       // let straggler stage-completed events drain before the footer
       Thread.sleep(1000)
+      spark.sparkContext.removeSparkListener(listener)
       println(f"[prof] $n rows=$c wall=$dt%.1fs")
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

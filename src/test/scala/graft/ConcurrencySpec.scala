@@ -15,9 +15,10 @@ import scala.concurrent.duration._
   *    while others are in flight. The shared surfaces this exercises:
   *    the Recommender model/non-empty caches (TrieMap), the BPE
   *    broadcast memo (ConcurrentHashMap, functions/Bpe.scala), the
-  *    Tables temp-view registration an_adhoc_sql re-runs per call
-  *    (same-name, same-definition replace — benign), and the
-  *    Multimodal codec seam.
+  *    child session's temp-view registration an_adhoc_sql checks per
+  *    call against the tables' fingerprint (registered under the
+  *    child's lock, the fingerprint stored after), and the Multimodal
+  *    codec seam.
   *  - same-query concurrency is additionally safe for PURE queries
   *    (no scratch side effects). Side-effecting ops (etl_backfill,
   *    s17_time_travel, …) write an app+op+dir-scoped scratch root

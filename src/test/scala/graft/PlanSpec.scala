@@ -283,8 +283,8 @@ class PlanSpec extends SparkSpec {
     // checkpoint — the entry's model build, the ALS-family precedent —
     // DO run at construction; they are not count jobs.)
     SparkEntry.queries("reco_item_item")(spark, dir) // warm the cache
-    // parquet-footer schema reads ("parquet at Tables.scala") run on
-    // EVERY construction and are not the probe; only count() jobs are
+    // only count() jobs are the probe (table resolution itself reads
+    // footers on the driver and launches none)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
