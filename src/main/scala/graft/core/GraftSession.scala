@@ -128,6 +128,27 @@ object GraftSession {
     s
   }
 
+  /** Release what a finished query left cached, before the next one
+    * runs, so one query's cache doesn't squeeze the next query's
+    * execution memory. Three layers, because clearCache alone left a
+    * suite accumulating pressure (r9: reco_item_item — entry ~36 of
+    * 53 — rose monotonically 7.2→9.5→11.7 s within its own runs, while
+    * flat in isolation): (1) catalog cache; (2) RDD-level blocks —
+    * localCheckpoint output (g_reachability, ss_knn_graph,
+    * llm_corpus_build) registers in the block manager but NOT the
+    * catalog cache, so clearCache never dropped it; (3) a driver GC
+    * nudge so the ContextCleaner reclaims shuffle files and broadcast
+    * blocks of the just-finished query — with a 100+ GiB heap the JVM
+    * may otherwise not GC for the whole suite, and dozens of queries'
+    * shuffle spill stays on disk squeezing the page cache the next
+    * query's scans need. */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    System.gc()
+  }
+
   /** Scratch path for a query's side-effect output, unique per
     * (operator, data dir, SPARK APPLICATION): two processes running
     * the same query against the same data dir (e.g. Verify and Bench

@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Gate, Tables}
 
 /** Item-item collaborative filtering on binary co-purchase (SURVEY.md
   * §2.8 — the memory-based "customers also bought" neighbor model the
@@ -68,6 +68,10 @@ import graft.core.Tables
   * broadcast (`graft.reco.niBroadcastLimit`, default 4M items), so it
   * can never become an unbounded driver fetch on a corpus where the
   * legacy path wouldn't have broadcast the same table.
+  *
+  * Path choices are recorded as graft.core.Gate decisions: `reco.kernel`
+  * (kernel or legacy) and, on the kernel path, `reco.pair_exchange`
+  * (whether the pair emit paid a user exchange, and why).
   */
 object ItemItem {
 
@@ -77,36 +81,8 @@ object ItemItem {
     * available, size via the bounded limit+1 collect instead". */
   val MissingTable: Long = -1L
 
-  /** The most recent kernel invocation's capped-purchases EXECUTED
-    * plan, RENDERED (the fact join → distinct → degree-cap pipeline
-    * the checkpoint materializes). TEST HOOK ONLY (PlanSpec): the
-    * kernel's served plan is the RowBridge RDD wrap, so this
-    * pipeline's physical plan (the shuffle_hash pins) is otherwise
-    * invisible to plan inspection. Never read on a production path.
-    *
-    * Stored as a STRING, never the QueryExecution: a retained QE pins
-    * every upstream ShuffleDependency of the executed pipeline for the
-    * hook's lifetime (a @volatile var outliving the query), keeping
-    * tens of GB of already-consumed fact-join/distinct/cap shuffle
-    * files undeletable through the pair emit — measured as the biggest
-    * single component of the sf30 rehearsal's ~55-58 GB scratch peak
-    * (the ENOSPC wall; BASELINE.md). The rendering costs one sub-ms
-    * string build per construction and pins nothing. */
-  @volatile private[graft] var lastKernelPlan: Option[String] = None
-
-  /** Whether the most recent kernel invocation had to repartition the
-    * checkpointed frame by user — for EITHER reason (the AQE-skew
-    * guard refusing the executed plan, or routine emit widening past
-    * gate scale). TEST HOOK ONLY (PlanSpec pins that the normal path
-    * does NOT pay the exchange and that the guard logic itself
-    * discriminates). */
-  @volatile private[graft] var lastPairSrcRepartitioned: Option[Boolean] = None
-
-  /** The two exchange causes SEPARATELY — (guardRefused, widened) —
-    * so scale evidence can distinguish "locality proof failed" from
-    * "pair volume widened the map side" (they coincide in the boolean
-    * above for any corpus past ~sf10). TEST/DIAG HOOK ONLY. */
-  @volatile private[graft] var lastPairExchangeCause: Option[(Boolean, Boolean)] = None
+  private val NiLimitKey = "graft.reco.niBroadcastLimit"
+  private val ForceExchangeKey = "graft.reco.forcePairExchange"
 
   /** n_i lookup shipped to the kernel: dense direct-indexed array when
     * the id space is compact (TPC-H partkeys are 1..P — one DRAM touch
@@ -536,11 +512,10 @@ object ItemItem {
   /** Top-k item neighbors. `partCount`/`lineitemCount`/`customerCount`
     * are the caller's memoized parquet-metadata probes (Long.MaxValue
     * on error — fails CLOSED onto the legacy/default path). */
-  def neighbors(t: Tables, k: Int, niBroadcastLimit: Long,
-                partCount: Long, lineitemCount: Long,
+  def neighbors(t: Tables, k: Int, partCount: Long, lineitemCount: Long,
                 customerCount: Long): DataFrame = {
-    val out = neighborsImpl(t, k, niBroadcastLimit, partCount,
-      lineitemCount, customerCount)
+    val out = neighborsImpl(t, k, Gate.limit(t.spark, NiLimitKey, 4000000L),
+      partCount, lineitemCount, customerCount)
     // rehearsal-scale scratch release: once the impl frame returns, the
     // capped pipeline's QueryExecution (and with it every upstream
     // fact-join/distinct/cap ShuffleDependency) is unreachable — the
@@ -573,6 +548,9 @@ object ItemItem {
     // collect, whose driver footprint is bounded by construction even
     // if the catalog turns out huge — the executors then did one
     // wasted pass and legacy takes over.
+    def kernelGate(inputs: => Seq[(String, Any)])(kernel: Boolean): Boolean =
+      Gate.record("reco.kernel", NiLimitKey, niBroadcastLimit,
+        ("part_rows" -> partCount) +: inputs)(kernel)
     if ((partCount >= 0 && partCount <= niBroadcastLimit)
         || partCount == MissingTable) {
       // one materialization of the capped purchases: without it the
@@ -583,18 +561,23 @@ object ItemItem {
       // frame whose catalog already fit the driver table; Bench's
       // inter-query hygiene (getPersistentRDDs.unpersist) reclaims it.
       val cappedCp = capped.localCheckpoint()
-      // render the hook AFTER the checkpoint ran, so the string is the
-      // AQE-finalized executed plan (what PlanSpec asserts against)
-      lastKernelPlan = Some(capped.queryExecution.executedPlan.toString)
       val niCp = cappedCp.groupBy(col("item")).agg(count(lit(1)).as("n_i"))
       val rows = niCp.select(col("item").cast("long"), col("n_i"))
-        .limit(math.min(niBroadcastLimit + 1, Int.MaxValue.toLong).toInt)
+        .limit(Gate.fetchBound(niBroadcastLimit))
         .collect()
       val nonNull = rows.filter(!_.isNullAt(0))
       val idsOk = nonNull.forall { r =>
         val id = r.getLong(0); id >= 0 && id < (1L << 31)
       }
-      if (rows.length > niBroadcastLimit || !idsOk) {
+      // the served plan is the RDD wrap, so the pipeline's executed
+      // plan (AQE-final: the checkpoint ran) rides the decision — as a
+      // STRING: a retained QueryExecution pins every upstream shuffle
+      // (tens of GB of undeletable files at the sf30 rehearsal)
+      val kernel = kernelGate(Seq("catalog_rows" -> rows.length,
+        "ids_in_range" -> idsOk,
+        "capped_plan" -> capped.queryExecution.executedPlan.toString))(
+        rows.length <= niBroadcastLimit && idsOk)
+      if (!kernel) {
         // catalog or id shape disqualified the kernel after the
         // checkpoint already materialized — let legacy consume it
         legacyNeighbors(t, cappedCp, niCp, k, niBroadcastLimit, partCount)
@@ -621,8 +604,7 @@ object ItemItem {
         // surviving a Spark upgrade. graft.reco.forcePairExchange is
         // the operator escape hatch: force the exchange on a Spark
         // build where the positive proof can't be established.)
-        val forceExchange = s.conf
-          .getOption("graft.reco.forcePairExchange").exists(_.toBoolean)
+        val forceExchange = Gate.flag(s, ForceExchangeKey)
         val pairSrc0 = cappedCp.select(col("user"), col("item"))
         val userLocal =
           !forceExchange && pairLocalityHolds(capped.queryExecution)
@@ -648,13 +630,15 @@ object ItemItem {
         // widening, sentinel + guard-refused caps the width at a
         // small multiple of the session default.
         val actualParts = cappedCp.rdd.getNumPartitions
-        val emitNeed = emitPartitions(
-          pairsEstimate(lineitemCount, customerCount), userLocal, defaultP)
-        val widenEmit = emitNeed > actualParts
-        lastPairSrcRepartitioned = Some(!userLocal || widenEmit)
-        lastPairExchangeCause = Some((!userLocal, widenEmit))
+        val pairsEst = pairsEstimate(lineitemCount, customerCount)
+        val emitNeed = emitPartitions(pairsEst, userLocal, defaultP)
+        // both causes are inputs: past ~sf10 they coincide
+        val exchange = Gate.record("reco.pair_exchange", ForceExchangeKey,
+          actualParts, Seq("forced" -> forceExchange, "user_local" -> userLocal,
+            "emit_need" -> emitNeed, "pairs_est" -> pairsEst))(
+          !userLocal || emitNeed > actualParts)
         val pairSrc =
-          if (!userLocal || widenEmit)
+          if (exchange)
             pairSrc0.repartition(math.max(emitNeed, defaultP), col("user"))
           else pairSrc0
         val p = pairPartitions(defaultP, lineitemCount, customerCount)
@@ -667,7 +651,10 @@ object ItemItem {
         org.apache.spark.sql.graftbridge.RowBridge
           .ofInternalRows(s, rdd, outputSchema)
       }
-    } else legacyNeighbors(t, capped, ni, k, niBroadcastLimit, partCount)
+    } else {
+      kernelGate(Nil)(false)
+      legacyNeighbors(t, capped, ni, k, niBroadcastLimit, partCount)
+    }
   }
 
   /** The metadata-cheap directed-pair volume estimate L·(L/C) both

@@ -23,35 +23,6 @@ import graft.functions.TextFunctions.normText
   */
 object Dedup {
 
-  /** Spread a small-file corpus across the cluster before a
-    * CPU-heavy projection: a compact parquet source (one ~MB file →
-    * one input split) would otherwise run the whole signature build
-    * on a single core. At warehouse scale the source's own splits
-    * already provide parallelism and the exchange is one narrow
-    * hash pass; locally it is the difference between 1 and 32 cores.
-    *
-    * The small/large decision reads the optimizer's SIZE ESTIMATE —
-    * driver-side metadata, never an execution. The previous probe
-    * (`docs.rdd.getNumPartitions`) looked exact but under AQE `.rdd`
-    * materializes every upstream query stage just to report a
-    * partition count, so each spread() of a post-join frame silently
-    * re-executed its whole subtree once (three serialized ~2.3 s
-    * single-task jobs per llm_corpus_build at sf0.1 — and a full
-    * extra pipeline pass at any scale). Below the threshold
-    * (defaultParallelism input splits' worth of bytes) the repartition
-    * is a KB-to-MB exchange that buys full-cluster parallelism for
-    * the signature build; above it the source's own splits already
-    * parallelize and big corpora skip the exchange exactly as before. */
-  private def spread(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
-    // shared sentinel-guarded gate (PlanStats.needsSpread): estimates at
-    // the defaultSizeInBytes sentinel mean "no stats exist" (LogicalRDD
-    // leaves), not "big" — those fall back to the leaves' concrete RDD
-    // partition counts instead of silently skipping the repartition.
-    if (graft.core.PlanStats.needsSpread(docs))
-      docs.repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col(idCol))
-    else docs
-
   /** Word n-gram shingle set (distinct) of the canonical text.
     * `normalize = false` declares textCol ALREADY canonical (the
     * caller ran normText once and cached it) — the regex chain is the
@@ -61,7 +32,7 @@ object Dedup {
     * idempotent. */
   def withShingles(docs: DataFrame, textCol: String = "text", n: Int = 3,
                    normalize: Boolean = true): DataFrame =
-    spread(docs)
+    graft.core.PlanStats.spread(docs, "doc_id")
       .withColumn("_words", split(
         if (normalize) normText(col(textCol)) else col(textCol), " "))
       .withColumn("shingles", array_distinct(transform(
@@ -171,7 +142,7 @@ object Dedup {
     val digitCols = (1 to 16).map { g =>
       expr(s"instr('$hexChars', substr(m, $g, 1)) - 1").as(s"d_$g")
     }
-    val words = spread(docs, idCol).select(
+    val words = graft.core.PlanStats.spread(docs, idCol).select(
       col(idCol).as("doc_id"),
       explode(split(normText(col(textCol)), " ")).as("w"))
       .withColumn("m", md5(col("w")))
@@ -230,7 +201,8 @@ object Dedup {
     * duplicates: near-dup is transitive in practice (A~B, B~C ⇒ one
     * cluster) and pair output alone can't drive a keep/drop decision.
     * Sparse edge sets (≤ driverMaxEdges) take a bounded-collect
-    * union-find fast path; above it, a distributed fixpoint where
+    * union-find fast path (the `dedup.clusters_driver` gate); above
+    * it, a distributed fixpoint where
     * each round is one neighbor-min hop (join + min-aggregation, the
     * standard scalable CC shape) plus one pointer-doubling hop, so
     * convergence is O(log diameter) — a pathological million-node
@@ -261,7 +233,8 @@ object Dedup {
     // cap+1 rows just to discard them (driver pressure, wasted fetch).
     val cap = math.min(driverMaxEdges, (Int.MaxValue - 2).toLong)
     val nEdges = slim.count()
-    if (nEdges <= cap) {
+    if (graft.core.Gate.record("dedup.clusters_driver", "", cap,
+        Seq("edges" -> nEdges))(nEdges <= cap)) {
       val arr = slim.collect().map(r => (r.getLong(0), r.getLong(1)))
       slim.unpersist()
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -439,7 +412,7 @@ object Dedup {
           // two, the division is lossless in double
           floor(length(t) / lit(64)).cast("long").as("lb"),
           sigOf(gs).as("sig"))), lit(1))), lit(1))
-    val grams = spread(docs)
+    val grams = graft.core.PlanStats.spread(docs, "doc_id")
       .select(col("doc_id"), packed.as("s"))
       .persist()
       .select(col("doc_id"), col("s.grams").as("grams"),

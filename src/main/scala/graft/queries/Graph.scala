@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Gate, Tables}
 
 /** Graph signals over the order interaction graph — the warehouse
   * analog of the link-analysis quality scores (PageRank-family) that
@@ -77,6 +77,20 @@ object Graph {
     else r.getLong(1)
   }
 
+  /** Both directions of the customer–supplier pair frame as packed
+    * (src, dst) node keys, persisted and partitioned ONCE by the key
+    * each path of the broadcast gate joins on: by DESTINATION under
+    * the gate (the contribution/count rows inherit the layout through
+    * the broadcast join, so the per-dst aggregation needs no exchange
+    * — shuffle-free rounds), by SOURCE past it (the per-round vertex
+    * join reuses it, so only the O(n) vertex frame moves). */
+  private def gatedEdges(pairs: DataFrame, broadcastGate: Boolean): DataFrame =
+    pairs.select((col("ck") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
+      .unionByName(pairs.select((col("sk") * 2 + 1).as("src"),
+        (col("ck") * 2).as("dst")))
+      .repartition(col(if (broadcastGate) "dst" else "src"))
+      .persist()
+
   val queries: Map[String, Q] = Map(
     "g_pagerank" -> ((s, dir) => {
       val t = Tables(s, dir)
@@ -111,23 +125,9 @@ object Graph {
       // ≈ hundreds of MB serialized, past any sane broadcast), fall
       // back to co-partitioned shuffled joins. Conf-gated so specs can
       // pin both paths on one fixture.
-      val useBroadcast = n <= s.conf.get(
-        "graft.pagerank.broadcastNodeLimit",
-        sys.env.getOrElse("GRAFT_PR_BCAST_LIMIT", "10000000")).toLong
-      // edges are pre-partitioned ONCE by the key each path joins on:
-      // broadcast path by DESTINATION (the contribution rows inherit
-      // the edge partitioning through the broadcast join, so the
-      // per-dst aggregation needs NO exchange — 5 shuffle-free
-      // iterations); shuffled path by SOURCE (the per-iteration
-      // ranks join reuses it, so only the O(n) rank frame moves)
-      val edges = {
-        val e = pairs.select((col("ck") * 2).as("src"),
-            (col("sk") * 2 + 1).as("dst"))
-          .unionByName(pairs.select((col("sk") * 2 + 1).as("src"),
-            (col("ck") * 2).as("dst")))
-        (if (useBroadcast) e.repartition(col("dst"))
-         else e.repartition(col("src"))).persist()
-      }
+      val useBroadcast = Gate.atMost(s, "pagerank.broadcast",
+        "graft.pagerank.broadcastNodeLimit", 10000000L, n)
+      val edges = gatedEdges(pairs, useBroadcast)
       // force-materialize the edge layout before the timed iteration
       // chain (nodes already materialized by the count above, pulling
       // pairs through its cache), then release the pairs scratch —
@@ -263,22 +263,10 @@ object Graph {
       val nBound =
         if (custN == Long.MaxValue || suppN == Long.MaxValue) Long.MaxValue
         else custN + suppN
-      val useBroadcast = nBound <= s.conf.get(
-        "graft.labelprop.broadcastNodeLimit",
-        sys.env.getOrElse("GRAFT_LP_BCAST_LIMIT", "10000000")).toLong
-      // edges pre-partitioned ONCE by the key each path joins on:
-      // broadcast path by DESTINATION (the (dst, label) count agg
-      // inherits the layout — no per-round exchange); shuffled path by
-      // SOURCE (the per-round label join reuses it, so only the O(n)
-      // label frame moves per round).
-      val edges = {
-        val e = pairs.select((col("ck") * 2).as("src"),
-            (col("sk") * 2 + 1).as("dst"))
-          .unionByName(pairs.select((col("sk") * 2 + 1).as("src"),
-            (col("ck") * 2).as("dst")))
-        (if (useBroadcast) e.repartition(col("dst"))
-         else e.repartition(col("src"))).persist()
-      }
+      val useBroadcast = Gate.atMost(s, "labelprop.broadcast",
+        "graft.labelprop.broadcastNodeLimit", 10000000L, nBound,
+        Seq("customers" -> custN, "suppliers" -> suppN))
+      val edges = gatedEdges(pairs, useBroadcast)
       // ONE copy of the round arithmetic (LabelPropagationSpec pins the
       // two paths identical): the paths differ only in how the O(n)
       // label frame meets the edges — broadcast under the ceiling,
@@ -309,7 +297,9 @@ object Graph {
         val suppKB = suppKeyBound(s, s"$dir/supplier.parquet")(
           keyBound(t.supplier, "s_suppkey"))
         val maxKey = math.max(custKB, suppKB)
-        maxKey < (1L << 31) && nBound < (1L << 30)
+        Gate.record("labelprop.packed_argmax", "", (1L << 31) - 1,
+          Seq("max_key" -> maxKey, "node_bound" -> nBound))(
+          maxKey < (1L << 31) && nBound < (1L << 30))
       }
       val argmax =
         if (packedArgmax)

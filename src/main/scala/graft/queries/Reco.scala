@@ -316,10 +316,7 @@ object Reco {
       // (bounded, degree-capped) user side streams the probe straight
       // through codegen — measured 6.0 s → 3.6 s at sf0.1.
       val t = Tables(s, dir)
-      val niBroadcastLimit =
-        s.conf.getOption("graft.reco.niBroadcastLimit").map(_.toLong)
-          .getOrElse(4_000_000L)
-      graft.ml.ItemItem.neighbors(t, K, niBroadcastLimit,
+      graft.ml.ItemItem.neighbors(t, K,
         partCountFor(t), lineitemCountFor(t), customerCountFor(t))
     }))
 

@@ -81,13 +81,14 @@ object Similarity {
   // Recommender.MaxQueryUsers and the fail-closed Reco.partCountFor
   // gate; both paths of every gated entry are pinned by AnnGateSpec.
 
-  /** Broadcast ceiling in ROWS of the (possibly probe-exploded)
-    * broadcast frame: 100k rows × ~300 B packed vector ≈ 30 MB.
-    * Session-conf-overridable so a cluster operator can size it to
-    * driver/executor memory; AnnGateSpec sets 0 to force the scale
-    * path on the fixture. */
-  private[graft] def maxBroadcastRows(s: SparkSession): Long =
-    s.conf.getOption("graft.ann.maxBroadcastRows").map(_.toLong).getOrElse(100000L)
+  /** The broadcast gate on `rows`, the row count of the (possibly
+    * probe-exploded) broadcast frame. Ceiling 100k rows × ~300 B packed
+    * vector ≈ 30 MB; session-conf-overridable so a cluster operator can
+    * size it to driver/executor memory; AnnGateSpec sets 0 to force the
+    * scale path on the fixture. */
+  private def broadcastable(s: SparkSession, rows: Long): Boolean =
+    graft.core.Gate.atMost(s, "ann.broadcast", "graft.ann.maxBroadcastRows",
+      100000L, rows)
 
   /** Rows a Hamming≤2 multi-probe explode emits per query vector. */
   private[graft] def probeCount(p: Int): Long = 1L + p + p.toLong * (p - 1) / 2
@@ -115,12 +116,12 @@ object Similarity {
   /** Gated corpus × query equi-join: `bRows` is the row count of the
     * frame that would be broadcast. */
   private def qJoin(corpus: DataFrame, q: DataFrame, bRows: Long, on: Column): DataFrame =
-    if (bRows <= maxBroadcastRows(corpus.sparkSession)) corpus.join(broadcast(q), on)
+    if (broadcastable(corpus.sparkSession, bRows)) corpus.join(broadcast(q), on)
     else corpus.join(q.hint("shuffle_hash"), on)
 
   private def qJoinOn(corpus: DataFrame, q: DataFrame, bRows: Long,
                       cols: Seq[String]): DataFrame =
-    if (bRows <= maxBroadcastRows(corpus.sparkSession)) corpus.join(broadcast(q), cols)
+    if (broadcastable(corpus.sparkSession, bRows)) corpus.join(broadcast(q), cols)
     else corpus.join(q.hint("shuffle_hash"), cols)
 
   /** Gated all-pairs scan (brute top-k, centroid assignment): past the
@@ -128,7 +129,7 @@ object Similarity {
     * task streams one corpus-slice × query-slice block — and keeps AQE
     * from promoting it back to a driver-side broadcast. */
   private def qCross(corpus: DataFrame, q: DataFrame, bRows: Long): DataFrame =
-    if (bRows <= maxBroadcastRows(corpus.sparkSession)) corpus.crossJoin(broadcast(q))
+    if (broadcastable(corpus.sparkSession, bRows)) corpus.crossJoin(broadcast(q))
     else corpus.crossJoin(q.hint("shuffle_replicate_nl"))
 
   /** Coarse-quantizer stride for the deterministic IVF entries. Below
@@ -211,24 +212,10 @@ object Similarity {
     cents
   }
 
-  /** Spread a small-file corpus across the cluster before a CPU-heavy
-    * per-vector projection (assignment cosines, PQ encode): a compact
-    * parquet source (one ~MB file → one input split) would otherwise
-    * run it all on a single core — and the partition count must be
-    * pinned or AQE re-coalesces the KB-sized exchange, blind to the
-    * downstream compute (same pattern as Dedup.spread). At corpus
-    * scale the source's own splits already parallelize. */
+  /** The shared `spread` gate (PlanStats) before a CPU-heavy
+    * per-vector projection (assignment cosines, PQ encode). */
   private def spread(e: DataFrame): DataFrame =
-    // size-estimate gate, not `.rdd.getNumPartitions`: under AQE the
-    // rdd probe MATERIALIZES every upstream stage to learn a partition
-    // count (see Dedup.spread) — the estimate is driver-side metadata.
-    // Sentinel-guarded (PlanStats.needsSpread): stats-free leaves fall
-    // back to their concrete RDD partition counts instead of silently
-    // reading the defaultSizeInBytes sentinel as "big".
-    if (graft.core.PlanStats.needsSpread(e))
-      e.repartition(e.sparkSession.sparkContext.defaultParallelism,
-        col("vec_id"))
-    else e
+    graft.core.PlanStats.spread(e, "vec_id")
 
   /** Exact brute-force top-K pairs for the every-100th query set —
     * shared by the baseline query and the ANN recall contracts.
@@ -333,15 +320,9 @@ object Similarity {
     // the truth term is the contract's priciest input (a corpus scan
     // per evaluation) and the result is tiny (K rows per query) —
     // persist it so repeated executions of the returned frame (bench
-    // best-of-N, the debug path below) run it once; the harness
-    // clears the cache between queries.
+    // best-of-N) run it once; the harness clears the cache between
+    // queries.
     val brute = brute0.persist()
-    if (sys.env.get("GRAFT_DEBUG_RECALL").contains("1")) {
-      val h = ann.select("qid", "vec_id")
-        .join(brute.select("qid", "vec_id"), Seq("qid", "vec_id"), "left_semi").count()
-      System.err.println(f"[recall-debug] hits=$h recall=${h.toDouble / (K * nQueries)}%.3f " +
-        f"scanFrac=${candRows.toDouble / (corpusN * nQueries)}%.3f")
-    }
     // vacuous cases: zero queries (empty corpus / fully-filtered
     // slice — ANSI mode makes even the DOUBLE division by zero an
     // error, so guard, don't divide), or a corpus of ≤ K vectors,
@@ -923,12 +904,6 @@ object Similarity {
       // while at corpus scale the gate no-ops (the source's own splits
       // parallelize). Evidence: plans/r18/ss_knn_graph_rejected_*.txt.
       val banded = knnBandedSig(e, nBands, p).persist()
-      val dbg = sys.env.get("GRAFT_DEBUG_RECALL").contains("1")
-      var t0 = System.nanoTime()
-      def lap(tag: String): Unit = if (dbg) {
-        System.err.println(f"[knn-graph-t] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        t0 = System.nanoTime()
-      }
       // the candidate-volume contract stat rides the rerank job as an
       // observed metric instead of a separate persist + count action —
       // at bench scale the audit's cost was dominated by job-launch
@@ -950,7 +925,6 @@ object Similarity {
       // dominates the query (measured ~23 s → ~8 s at sf0.1).
       var graph = rerank(cands).localCheckpoint(true)
       var candRows = obsSeed.get("c").asInstanceOf[Long]
-      lap("seed-rerank")
       // NN-Descent refinement: a neighbor's neighbor is a likely
       // neighbor — undirected 2-hop candidate expansion + exact
       // rerank. Each round adds ≤ (2K)² candidates per node (O(n·K²),
@@ -971,7 +945,6 @@ object Similarity {
         graph = rerank(expanded).localCheckpoint(true)
         candRows += obsExp.get("c").asInstanceOf[Long]
       }
-      lap("descent")
       // ALL the audit scalars ride ONE action: the graph stats agg,
       // the recall join-agg and the banding-occupancy agg are
       // independent single-row subtrees, so a crossJoin of the three
@@ -1019,18 +992,21 @@ object Similarity {
       val auditRow = statAgg.crossJoin(hitAgg).crossJoin(occAgg).first()
       val (nEdges, nSrc) = (auditRow.getLong(0), auditRow.getLong(1))
       val (nq, hits) = (auditRow.getLong(2), auditRow.getLong(3))
-      lap("audit-stats")
       val occPairs = {
         val d = auditRow.getDecimal(4)
         if (d.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) >= 0)
           Long.MaxValue else d.longValue()
       }
       val candBudget = occPairs + descentRounds.toLong * (4 * K * K + 3 * K) * n
-      if (sys.env.get("GRAFT_DEBUG_RECALL").contains("1"))
-        System.err.println(f"[knn-graph] n=$n edges=$nEdges srcCov=${nSrc.toDouble / n}%.3f " +
-          f"recall=${if (nq > 0) hits.toDouble / (K * nq) else 1.0}%.3f " +
-          f"scanFrac=${candRows.toDouble / (n.toDouble * n)}%.4f " +
-          f"cands=$candRows budget=$candBudget occ=${occPairs / math.max(n, 1)}·n")
+      // the audit numbers (all already on the driver) ride the budget
+      // decision, rendered only under a Gate.capture
+      val withinBudget = graft.core.Gate.record("knn.cand_budget", "",
+        candBudget, Seq("n" -> n, "edges" -> nEdges,
+          "src_cov" -> nSrc.toDouble / n,
+          "recall" -> (if (nq > 0) hits.toDouble / (K * nq) else 1.0),
+          "scan_frac" -> candRows.toDouble / (n.toDouble * n),
+          "cands" -> candRows, "occ_per_node" -> occPairs / math.max(n, 1)))(
+        candRows <= candBudget)
       banded.unpersist()
       val s2 = e.sparkSession
       import s2.implicits._
@@ -1048,7 +1024,7 @@ object Similarity {
         // algebraic bound — see candBudget above); AnnBudgetSpec pins
         // it on a duplicated AND a high-entropy fixture with no
         // constant to retune at the next corpus shape
-        candRows <= candBudget))
+        withinBudget))
         .toDF("n_nodes", "degree_bounded", "coverage_ok", "recall_ok",
           "cands_within_band_budget")
       }
@@ -1144,11 +1120,12 @@ object Similarity {
         .join(truth.select("qid", "vec_id"), Seq("qid", "vec_id"), "left_semi")
         .count()
       val nq = e.filter(col("vec_id") % 100 === 0).count()
-      if (sys.env.get("GRAFT_DEBUG_RECALL").contains("1"))
-        System.err.println(f"[knn-graph-inc] n=$n batch=$batchN edges=$nEdges " +
-          f"srcCov=${nSrc.toDouble / n}%.3f " +
-          f"recall=${if (nq > 0) hits.toDouble / (K * nq) else 1.0}%.3f " +
-          f"batchCands=$batchCands perBatchVec=${batchCands / math.max(batchN, 1)}")
+      val withinBudget = graft.core.Gate.record("knn.batch_budget", "",
+        batchBudget, Seq("n" -> n, "batch" -> batchN, "edges" -> nEdges,
+          "src_cov" -> nSrc.toDouble / n,
+          "recall" -> (if (nq > 0) hits.toDouble / (K * nq) else 1.0),
+          "batch_cands" -> batchCands))(
+        batchN == 0L || batchCands <= batchBudget)
       val s2 = e.sparkSession
       import s2.implicits._
       Seq((n,
@@ -1158,7 +1135,7 @@ object Similarity {
         // per-batch candidates within the derived batch budget — the
         // incrementality claim itself, made algebraic (see batchBudget
         // above). batchN only gates the degenerate no-batch case.
-        (batchN == 0L || batchCands <= batchBudget)))
+        withinBudget))
         .toDF("n_nodes", "degree_bounded", "coverage_ok", "recall_ok",
           "batch_cost_linear_in_batch")
     }),
@@ -1201,7 +1178,7 @@ object Similarity {
       // the stratum is 2% of the corpus — same linear-growth class as
       // the query broadcasts, same gate: replicated nested loop past
       // the ceiling (the non-equi condition leaves no equi fallback)
-      val xG = if (n / 50 + 1 <= maxBroadcastRows(s))
+      val xG = if (broadcastable(s, n / 50 + 1))
         broadcast(x) else x.hint("shuffle_replicate_nl")
       val nTrue = xG.join(y, col("id_a") < col("id_b"))
         .filter(expr(cosineSql("e_a", "e_b", DIM)) >= NEARDUP_TAU).count()

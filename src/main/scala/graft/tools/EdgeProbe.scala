@@ -102,12 +102,7 @@ object EdgeProbe {
           println(s"[probe] $mode FAIL  $name: ${msg.linesIterator.take(3).mkString(" | ")}")
           failures ::= (mode, name, msg)
         }
-        // same inter-query hygiene as Verify/Bench: drop catalog cache,
-        // RDD blocks (localCheckpoints), and nudge the ContextCleaner.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        System.gc()
+        graft.core.GraftSession.releaseCaches(spark)
       }
     }
     failures.reverse

@@ -34,13 +34,6 @@ object PlanDump {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("q1_agg"))
     val spark = graft.core.GraftSession.local("graft-plandump")
-    // GRAFT_PLANDUMP_CONF="k=v[,k=v...]": session conf overrides, so
-    // conf-gated scale paths (pagerank/LP broadcast ceilings) can be
-    // dumped without code edits.
-    sys.env.get("GRAFT_PLANDUMP_CONF").toSeq
-      .flatMap(_.split(",")).map(_.split("=", 2))
-      .collect { case Array(k, v) => (k, v) }
-      .foreach { case (k, v) => spark.conf.set(k, v) }
     // GRAFT_PLANDUMP_ACTIONS=1: also print the executed plan of every
     // ACTION fired while the query runs — iterative queries truncate
     // lineage per round (localCheckpoint), so the returned frame's

@@ -7,7 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * stage, wall time, task-time sum, record/byte volumes for input,
   * shuffle read and shuffle write, plus memory/disk spill — the
   * evidence that tells WHICH exchange or scan dominates an expensive
-  * entry before optimizing it.
+  * entry before optimizing it. After each entry's row count it prints
+  * the entry's gate decisions (graft.core.Gate), one `[gate]` line
+  * each. Session confs (e.g. a gate's ceiling) come from
+  * GRAFT_SESSION_CONF.
   *
   * Usage: runMain graft.tools.StageProf <dir> <name[,name...]>
   */
@@ -16,14 +19,6 @@ object StageProf {
     val dir = args.headOption.getOrElse("/tmp/graft_sf10")
     val names = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq("reco_item_item"))
     val spark = graft.core.GraftSession.local("graft-stageprof")
-    // GRAFT_PROF_CONF="k=v[,k=v...]": session conf overrides (same as
-    // PlanDump's GRAFT_PLANDUMP_CONF) — rehearsals need conf-gated
-    // paths (e.g. graft.reco.niBroadcastLimit past the 4M default at
-    // sf30's 6M-item catalog) without code edits.
-    sys.env.get("GRAFT_PROF_CONF").toSeq
-      .flatMap(_.split(",")).map(_.split("=", 2))
-      .collect { case Array(k, v) => (k, v) }
-      .foreach { case (k, v) => spark.conf.set(k, v) }
     val listener = new SparkListener {
       // job boundaries: serialized driver barriers are invisible in the
       // per-stage table (a query "one action" can be many jobs — e.g.
@@ -33,8 +28,10 @@ object StageProf {
       private val jobSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
       override def onJobStart(ev: SparkListenerJobStart): Unit = {
         jobStart.put(ev.jobId, ev.time)
+        // the result stage's name is the action's call site ("count at
+        // X.scala:N"); job properties carry none unless setCallSite ran
         jobSite.put(ev.jobId,
-          Option(ev.properties.getProperty("callSite.short")).getOrElse("?"))
+          ev.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?"))
         println(f"[job   ${ev.jobId}%4d] START " +
           jobSite.get(ev.jobId).takeWhile(_ != '\n').take(60))
       }
@@ -74,15 +71,15 @@ object StageProf {
       }
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val c = graft.SparkEntry.queries(n)(spark, dir).count()
+      val (c, decisions) = graft.core.Gate.capture(
+        graft.SparkEntry.queries(n)(spark, dir).count())
       val dt = (System.nanoTime() - t0) / 1e9
       // let straggler stage-completed events drain before the footer
       Thread.sleep(1000)
       spark.sparkContext.removeSparkListener(listener)
       println(f"[prof] $n rows=$c wall=$dt%.1fs")
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
+      decisions.foreach(d => println(s"[gate] $d"))
+      graft.core.GraftSession.releaseCaches(spark)
     }
     graft.core.GraftSession.dropScratch(spark)
     spark.stop()

@@ -87,6 +87,30 @@ class ConcurrencySpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("gate decisions land only in their own query's capture") {
+    // the decision scope is per thread: two entries constructed at the
+    // same time, each inside its own Gate.capture, must each log only
+    // their own gates (the process-global hook vars the log replaced
+    // were overwritten by whichever query finished last)
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val futs = Seq("reco_item_item", "g_label_propagation").map { n =>
+        Future {
+          start.await()
+          n -> graft.core.Gate.capture(snap(n))._2
+        }
+      }
+      val logs = Await.result(Future.sequence(futs), 10.minutes).toMap
+      val reco = logs("reco_item_item")
+      val lp = logs("g_label_propagation")
+      assert(reco.count(_.name == "reco.kernel") == 1, reco)
+      assert(reco.forall(_.name.startsWith("reco.")), reco)
+      assert(lp.nonEmpty && lp.forall(_.name.startsWith("labelprop.")), lp)
+    } finally pool.shutdown()
+  }
+
   test("cross-dir concurrency: SQL-entry queries isolate per data dir") {
     // Two data dirs served through ONE root session used to fight over
     // session-scoped temp-view names (the round-11 contract hole);

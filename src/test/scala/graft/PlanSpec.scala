@@ -21,6 +21,28 @@ class PlanSpec extends SparkSpec {
   private def finalPlan(name: String): String =
     executedPlan(name).split("== Initial Plan ==").head
 
+  /** reco_item_item's result (sorted) and the gate decisions its
+    * construction recorded. */
+  private def itemItemRun(d: String = dir): (Seq[(Long, Int, Long, Long, Double)],
+      Seq[graft.core.Gate.Decision]) =
+    graft.core.Gate.capture(
+      SparkEntry.queries("reco_item_item")(spark, d).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
+          r.getDouble(4))).sortBy(t => (t._1, t._2)).toSeq)
+
+  private def decision(log: Seq[graft.core.Gate.Decision],
+                       name: String): graft.core.Gate.Decision =
+    log.find(_.name == name).getOrElse(fail(s"no $name decision in $log"))
+
+  /** The kernel's capped-purchases executed plan. The served plan is
+    * the RDD wrap, so the join-bearing pipeline is read from the
+    * `reco.kernel` decision's inputs. */
+  private def kernelPlan(): String = {
+    val kernel = decision(itemItemRun()._2, "reco.kernel")
+    assert(kernel.outcome, s"kernel did not engage: $kernel")
+    kernel.inputs.toMap.get("capped_plan").map(_.toString).getOrElse(fail(kernel.toString))
+  }
+
   test("p1: projection prunes the parquet scan to the selected columns") {
     val plan = executedPlan("p1_projection")
     assert(plan.contains("ReadSchema: struct<c_custkey:bigint,c_mktsegment:string>"), plan)
@@ -108,13 +130,8 @@ class PlanSpec extends SparkSpec {
   test("new join-family ops: candidate joins are equi, nested loops only for 1-row scalars") {
     for (name <- Seq("g_triangle_count", "reco_item_item", "dd_containment")) {
       val plan =
-        if (name == "reco_item_item") {
-          // the kernel's served plan is the RDD wrap; the join-bearing
-          // pipeline is the checkpointed purchases build (test hook)
-          SparkEntry.queries(name)(spark, dir).collect()
-          graft.ml.ItemItem.lastKernelPlan
-            .getOrElse(fail("kernel did not engage"))
-        } else finalPlan(name)
+        if (name == "reco_item_item") kernelPlan()
+        else finalPlan(name)
       assert(!plan.contains("CartesianProduct"), s"$name:\n$plan")
       // a BroadcastNestedLoopJoin is tolerable ONLY as the explicit
       // Cross attach of a 1-row aggregate (crossJoin(broadcast(_))) —
@@ -266,10 +283,8 @@ class PlanSpec extends SparkSpec {
     // quietly revert them. The kernel's served plan is the RDD wrap,
     // so the pin reads the capped-purchases QueryExecution (the
     // checkpointed fact-join → distinct → degree-cap pipeline)
-    // through the ItemItem test hook.
-    SparkEntry.queries("reco_item_item")(spark, dir).collect()
-    val plan = graft.ml.ItemItem.lastKernelPlan
-      .getOrElse(fail("kernel did not engage"))
+    // through the reco.kernel gate decision.
+    val plan = kernelPlan()
     assert(plan.contains("ShuffledHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
   }
@@ -283,27 +298,33 @@ class PlanSpec extends SparkSpec {
     // checkpoint — the entry's model build, the ALS-family precedent —
     // DO run at construction; they are not count jobs.)
     SparkEntry.queries("reco_item_item")(spark, dir) // warm the cache
-    // only count() jobs are the probe (table resolution itself reads
-    // footers on the driver and launches none)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(s.properties.getProperty("callSite.short"))
-              .exists(_.startsWith("count")))
-          jobs.incrementAndGet()
+    // only count() actions are the probe (table resolution itself reads
+    // footers on the driver and launches none). Counted as actions, not
+    // jobs: a job carries no call site, and under AQE its stages are
+    // named after the adaptive executor's thread, not the action.
+    val counts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "count") counts.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(listener)
     try {
       SparkEntry.queries("reco_item_item")(spark, dir)
       SparkEntry.queries("reco_item_item")(spark, dir)
       // construction is synchronous (a gate count() would have BLOCKED
-      // until its job finished); the grace period only covers listener
-      // bus delivery latency for the assertion
+      // until it finished); the grace period only covers listener bus
+      // delivery latency for the assertion
       Thread.sleep(1500)
-      assert(jobs.get() == 0,
-        s"expected zero jobs constructing a cached-gate query, saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(counts.get() == 0,
+        s"expected zero counts constructing a cached-gate query, saw ${counts.get()}")
+      // control: the listener does see a count() action
+      graft.core.Tables(spark, dir).part.count()
+      Thread.sleep(1500)
+      assert(counts.get() == 1)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("reco_item_item: kernel trusts the reported hash(user) partitioning " +
@@ -314,12 +335,23 @@ class PlanSpec extends SparkSpec {
     // breaks it and reports Unknown). Pin both directions: the normal
     // run must NOT pay the repartition(user) fallback, and the guard
     // itself must discriminate real partitionings.
-    graft.ml.ItemItem.lastPairSrcRepartitioned = None
-    SparkEntry.queries("reco_item_item")(spark, dir).collect()
-    assert(graft.ml.ItemItem.lastPairSrcRepartitioned.contains(false),
-      "kernel took the safety exchange (or did not engage) on a " +
-        "normally-partitioned corpus: " +
-        graft.ml.ItemItem.lastPairSrcRepartitioned)
+    val exchange = decision(itemItemRun()._2, "reco.pair_exchange")
+    assert(!exchange.outcome,
+      s"kernel took the safety exchange on a normally-partitioned corpus: $exchange")
+  }
+
+  test("reco_item_item: a Long.MaxValue kernel ceiling serves the default result") {
+    // the n_i collect is bounded at limit + 1 rows; at Long.MaxValue a
+    // plain + 1 wrapped negative, the collect fetched nothing and the
+    // kernel's empty lookup threw on the first pair
+    val (default, _) = itemItemRun()
+    spark.conf.set("graft.reco.niBroadcastLimit", Long.MaxValue.toString)
+    try {
+      val (unbounded, log) = itemItemRun()
+      assert(decision(log, "reco.kernel").outcome)
+      assert(default.nonEmpty)
+      assert(unbounded == default)
+    } finally spark.conf.unset("graft.reco.niBroadcastLimit")
   }
 
   test("pairLocalityHolds discriminates the non-skew user-keyed SHJ " +
@@ -402,19 +434,17 @@ class PlanSpec extends SparkSpec {
       (2 to 9).flatMap(u => Seq((10L + u, u.toLong), (10L + u, (u + 1).toLong)))
     items.toDF("l_orderkey", "l_partkey").repartition(8)
       .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    def collectSorted() =
-      SparkEntry.queries("reco_item_item")(spark, d).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
-          r.getDouble(4))).sortBy(t => (t._1, t._2)).toSeq
     val (exchanged, legacy) = try {
       spark.conf.set("graft.reco.forcePairExchange", "true")
-      graft.ml.ItemItem.lastPairSrcRepartitioned = None
-      val exchanged = collectSorted()
-      assert(graft.ml.ItemItem.lastPairSrcRepartitioned.contains(true),
-        "escape hatch did not route through the safety exchange")
+      val (exchanged, log) = itemItemRun(d)
+      val exchange = decision(log, "reco.pair_exchange")
+      assert(exchange.outcome && exchange.inputs.toMap.get("forced").contains(true),
+        s"escape hatch did not route through the safety exchange: $exchange")
       spark.conf.unset("graft.reco.forcePairExchange")
       spark.conf.set("graft.reco.niBroadcastLimit", "-1") // legacy path
-      (exchanged, collectSorted())
+      val (legacy, legacyLog) = itemItemRun(d)
+      assert(!decision(legacyLog, "reco.kernel").outcome)
+      (exchanged, legacy)
     } finally {
       spark.conf.unset("graft.reco.forcePairExchange")
       spark.conf.unset("graft.reco.niBroadcastLimit")
